@@ -1997,6 +1997,17 @@ def test_banded_hamming_pairs_shared_helper(spark):
     with pytest.raises(ValueError, match="pigeonhole"):
         banded_hamming_pairs(df, "h", "id", bits=58, bands=2, max_hamming=3)
 
+    # one band (valid for max_hamming 0): the uncapped first-band rule
+    # keeps every exact-duplicate pair, as the capped path does
+    one_band = dict(hash_col="h", id_col="id", bits=58, bands=1, max_hamming=0)
+    uncapped = sorted(
+        banded_hamming_pairs(df, max_bucket_size=None, **one_band).collect()
+    )
+    assert uncapped == sorted(
+        banded_hamming_pairs(df, max_bucket_size=len(rows), **one_band).collect()
+    )
+    assert [(r["id_a"], r["id_b"], r["hamming"]) for r in uncapped] == [(1, 2, 0)]
+
 
 def test_banded_hamming_capped_buckets_names_the_drops(spark):
     """The exclusion report is exactly the complement of the capped

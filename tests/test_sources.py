@@ -223,7 +223,7 @@ def test_parquet_schema_evolution_merges_and_nulls(spark, tmp_path):
 
 def test_read_table_normalizes_events_ts_layouts(spark, sf_dir, tmp_path):
     """events.ts physical type has varied across testdata generations
-    (TIMESTAMP(NANOS) read as bigint under nanosAsLong; plain us
+    (TIMESTAMP(NANOS) declared and read as bigint; plain us
     timestamp-without-tz read as TIMESTAMP_NTZ).  read_table must give
     downstream epoch arithmetic a session-UTC TIMESTAMP either way —
     sessionize_gaps broke on the NTZ layout (cast-to-long rejected)."""
@@ -1089,10 +1089,53 @@ def test_compact_parquet_rejects_empty_or_remote_src(spark, tmp_path):
         compact_parquet(spark, str(empty), str(tmp_path / "out"))
 
 
+def test_read_table_declares_the_inferred_schema(spark, sf_dir, tmp_path):
+    """read_table's one scan declares the schema Spark would infer: for
+    every table of every scale-factor directory next to the test one,
+    the footer-derived schema equals ``spark.read.parquet(path).schema``
+    (events: after ts normalisation to TIMESTAMP).  Spark-written files
+    (INT96 timestamps, NTZ, non-nullable nested types, a part-file
+    directory) declare what Spark infers for them too."""
+    import glob
+
+    from pyspark.sql.types import StructField, StructType, TimestampType
+
+    from yet_another_map_reduce_spark.sources.readers import _footer_schema
+
+    for d in sorted({sf_dir, *glob.glob(os.path.join(os.path.dirname(sf_dir), "sf*"))}):
+        for f in sorted(os.listdir(d)):
+            path = os.path.join(d, f)
+            inferred = spark.read.parquet(path).schema
+            assert _footer_schema(path) == inferred, path
+            name = f.removesuffix(".parquet")
+            if name == "events":
+                inferred = StructType(
+                    [
+                        StructField(c.name, TimestampType()) if c.name == "ts" else c
+                        for c in inferred
+                    ]
+                )
+            assert read_table(spark, d, name).schema == inferred, path
+
+    sw = tmp_path / "spark_written"
+    sw.mkdir()
+    spark.sql(
+        "SELECT 1L AS id, timestamp'2020-01-01 00:00:00' AS ts, "
+        "timestamp_ntz'2020-01-01 00:00:00' AS tn, array(1, 2) AS arr, "
+        "map('a', 1) AS m, named_struct('x', 1, 'y', 'z') AS st, "
+        "CAST(1.5 AS DECIMAL(10, 2)) AS dec"
+    ).write.parquet(str(sw / "t.parquet"))
+    path = str(sw / "t.parquet")
+    assert _footer_schema(path) == spark.read.parquet(path).schema
+    got = read_table(spark, str(sw), "t").first()
+    assert got["ts"].year == 2020 and got["tn"].year == 2020 and got["arr"] == [1, 2]
+
+
 def test_read_table_events_does_not_mutate_caller_conf(spark, sf_dir):
-    """The nanosAsLong flip is scoped to a cloned session: the caller's
-    session conf is untouched before, during, and after (previously a
-    set/restore on the shared session raced concurrent reads)."""
+    """read_table declares the footer schema instead of flipping
+    nanosAsLong: the caller's session conf is untouched before, during,
+    and after (a set/restore on the shared session raced concurrent
+    reads), and the frame composes with the caller's other frames."""
     from yet_another_map_reduce_spark.sources.readers import read_table
 
     key = "spark.sql.legacy.parquet.nanosAsLong"
@@ -1117,10 +1160,7 @@ def test_read_table_nanos_generation_floor_division(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as papq
 
-    from yet_another_map_reduce_spark.sources.readers import (
-        _events_ts_is_nanos,
-        read_table,
-    )
+    from yet_another_map_reduce_spark.sources.readers import read_table
 
     sf = tmp_path / "sf"
     sf.mkdir()
@@ -1131,7 +1171,7 @@ def test_read_table_nanos_generation_floor_division(spark, tmp_path):
         }
     )
     papq.write_table(tbl, str(sf / "events.parquet"), store_schema=False)
-    assert _events_ts_is_nanos(str(sf / "events.parquet"))
+    assert papq.read_schema(str(sf / "events.parquet")).field("ts").type == pa.timestamp("ns")
     rows = {r["event_id"]: r["ts"] for r in read_table(spark, str(sf), "events").collect()}
     # -1 ns floors to -1 us (23:59:59.999999), NOT to epoch
     assert rows[1] == dt.datetime(1969, 12, 31, 23, 59, 59, 999999)

@@ -117,9 +117,10 @@ def percentile_exact_dist(
        property test against ``F.percentile`` itself).
 
     Contract / caveats (callers must hold these for exact equivalence):
-    values non-null and finite (a group with ONLY nulls is dropped
-    here, where ``percentile`` would emit NULL; NaN sorts before
-    everything via the null bucket where ``percentile`` sorts it last);
+    exact only for non-null, finite values (a group with ONLY nulls is
+    dropped here, where ``percentile`` would emit NULL; ``floor(NaN)``
+    is 0, so a NaN lands in bucket 0 among the values in [0, 1), where
+    ``percentile`` sorts it last);
     the value domain must be wide enough that ``floor`` buckets stay
     small (true for 2-decimal prices; a domain inside [0,1) would put
     every row in one bucket).

@@ -830,7 +830,8 @@ def banded_hamming_pairs(
                 col = col.bitwiseAND(F.lit((1 << width) - 1))
             return col == 0
 
-        first_band = ~F.greatest(
+        # one band: every collision is a first-band collision
+        first_band = F.lit(True) if bands == 1 else ~F.greatest(
             F.lit(False),
             *[
                 (F.lit(j) < F.col("band")) & _band_zero(xor, j)

@@ -45,6 +45,7 @@ from yet_another_map_reduce_spark.operators import (
 from yet_another_map_reduce_spark.sources.readers import read_table
 from yet_another_map_reduce_spark.caching import tracked_cache
 from yet_another_map_reduce_spark.localrel import local_relation
+from yet_another_map_reduce_spark.partitioning import spread_small
 from yet_another_map_reduce_spark.streaming.windows import (
     session_windowed,
     sliding_windowed,
@@ -92,24 +93,6 @@ def _sql_word_grams(n: int, toks: str = "w") -> str:
         f"list_transform(generate_series(1, len({toks}) - {n - 1}), "
         f"i -> array_to_string({toks}[i:i+{n - 1}], ' '))"
     )
-
-
-def _spread_small(df: DataFrame, *cols: str) -> DataFrame:
-    """Adaptive parallelism for an expensive per-row kernel/projection
-    over a SMALL input (guide §2.5 input skew): single-row-group local
-    parquet cannot be split, so at bench scale a 1-2 MB table feeds the
-    whole scoring/synthesis stage to ONE task (profiled r16: 1.5-2.3
-    serial CPU-seconds while 31 cores idle) and the 8-core/32-core
-    scaling measurement reads flat.  When the plan has fewer partitions
-    than the session's default parallelism, hash-repartition on the
-    given key; when input splits already exceed the cores — every real
-    at-scale scan — this is a NO-OP, so no corpus-sized shuffle is ever
-    introduced (the guard is what makes this scale-safe rather than a
-    local[32] constant).  Canonical implementation:
-    :func:`yet_another_map_reduce_spark.partitioning.spread_small`."""
-    from yet_another_map_reduce_spark.partitioning import spread_small
-
-    return spread_small(df, *cols)
 
 
 def _plant_short_docs(d: DataFrame) -> DataFrame:
@@ -1475,7 +1458,7 @@ def q_text_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = F.regexp_extract_all(
         F.lower(F.col("text")), F.lit(text.BPE_WORD_RE), F.lit(0)
     )
-    return _spread_small(d, "doc_id").select(
+    return spread_small(d, "doc_id").select(
         "doc_id",
         F.size(words).cast("bigint").alias("n_words"),
         text.bpe_token_count("text", merges, n_docs=_doc_count(d, sf_dir))
@@ -1997,7 +1980,7 @@ def q_pipeline_training_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     id per fingerprint) → token + chunk accounting.  One scan, one
     window shuffle on the fixed-width fingerprint — the composition a
     100 TB corpus-prep job runs nightly."""
-    d = _spread_small(read_table(spark, sf_dir, "documents"), "doc_id")
+    d = spread_small(read_table(spark, sf_dir, "documents"), "doc_id")
     scored = d.select(
         "doc_id",
         text.lang_id("text").alias("lang"),
@@ -2652,7 +2635,7 @@ def q_multimodal_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yet_another_map_reduce_spark.functions import md5_hash64
     from yet_another_map_reduce_spark.operators import multimodal
 
-    d = _spread_small(
+    d = spread_small(
         read_table(spark, sf_dir, "documents").where(F.col("doc_id") < 400),
         "doc_id",
     )
@@ -3089,7 +3072,7 @@ def q_pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guarded spread: the BPE-count projection is ~1.1 serial CPU-s
     # over the unsplittable bench file (r16 profile); packing itself is
     # layout-invariant by contract, so the spread cannot change rows
-    dd = _spread_small(d, "doc_id").select(
+    dd = spread_small(d, "doc_id").select(
         "doc_id",
         text.bpe_token_count("text", merges, n_docs=_doc_count(d, sf_dir))
         .cast("bigint")

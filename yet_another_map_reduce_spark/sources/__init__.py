@@ -4,11 +4,9 @@ from yet_another_map_reduce_spark.sources.avro_format import read_avro, write_av
 from yet_another_map_reduce_spark.sources.catalog import Catalog
 from yet_another_map_reduce_spark.sources.readers import (
     TABLES,
-    load_tables,
     read_csv,
     read_json,
     read_orc,
-    read_parquet,
     read_table,
     read_text,
 )
@@ -24,12 +22,10 @@ from yet_another_map_reduce_spark.sources.writers import (
 __all__ = [
     "TABLES",
     "Catalog",
-    "load_tables",
     "read_avro",
     "read_csv",
     "read_json",
     "read_orc",
-    "read_parquet",
     "read_table",
     "read_text",
     "overwrite_partitions",

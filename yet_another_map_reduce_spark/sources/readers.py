@@ -9,11 +9,20 @@ down to the format (parquet row-group/page pruning at scale).
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    LongType,
+    MapType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+)
 
 #: Canonical test-table names (TESTDATA.md).
 TABLES = (
@@ -28,13 +37,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Columnar scan. Predicate/projection pushdown and partition pruning
-    are free as long as callers keep filters declarative (no UDF in the
-    WHERE clause)."""
-    return spark.read.parquet(path)
 
 
 def read_text(spark: SparkSession, path: str) -> DataFrame:
@@ -165,29 +167,59 @@ def read_xml(
     return r.load(path)
 
 
-_NANOS_CONF_LOCK = __import__("threading").Lock()
+def _footer_schema(path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` would infer, derived from
+    ONE parquet footer with pyarrow so the scan can declare it.
 
-
-def _events_ts_is_nanos(path: str) -> bool:
-    """True iff the events parquet stores ``ts`` as TIMESTAMP(NANOS),
-    decided from one file footer via pyarrow — no Spark conf touched."""
+    Spark-written files carry their exact Spark schema in the footer
+    (``org.apache.spark.sql.parquet.row.metadata``), which Spark's own
+    inference prefers; it is used as is (this is also what keeps a
+    Spark-written INT96 timestamp a TIMESTAMP).  Other writers' columns
+    map through ``from_arrow_type``: timestamp-without-tz is
+    TIMESTAMP_NTZ, as Spark infers it, and ``timestamp[ns]`` (INT64
+    TIMESTAMP(NANOS), which Spark cannot read as a timestamp) is
+    declared ``bigint`` — Spark then reads the raw nanosecond count,
+    with no session conf involved.
+    """
+    import pyarrow as pa
     import pyarrow.parquet as papq
+    from pyspark.sql.pandas.types import from_arrow_type
 
-    p = path
-    if os.path.isdir(p):
-        parts = sorted(f for f in os.listdir(p) if f.endswith(".parquet"))
-        if not parts:
-            return False
-        p = os.path.join(p, parts[0])
-    try:
-        field = papq.read_schema(p).field("ts")
-    except (KeyError, OSError):
-        return False
-    return str(field.type) == "timestamp[ns]"
+    if os.path.isdir(path):
+        path = os.path.join(path, min(f for f in os.listdir(path) if f.endswith(".parquet")))
+    arrow = papq.read_schema(path)
+    spark_json = (arrow.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    if spark_json is not None:
+        schema = StructType.fromJson(json.loads(spark_json))
+    else:
+        schema = StructType(
+            [
+                StructField(
+                    f.name,
+                    LongType()
+                    if f.type == pa.timestamp("ns")
+                    else from_arrow_type(f.type, prefer_timestamp_ntz=True),
+                )
+                for f in arrow
+            ]
+        )
+    return _nullable(schema)
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` nullable at every level, as a file scan's schema always is."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one canonical test table from a scale-factor directory.
+    """Load one canonical test table from a scale-factor directory: one
+    scan with the footer schema declared (:func:`_footer_schema`).
 
     ``events.parquet``'s ``ts`` physical type has varied across testdata
     generations (TIMESTAMP(NANOS), plain µs TIMESTAMP without timezone);
@@ -197,36 +229,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     disk.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(_footer_schema(path)).parquet(path)
     if name != "events":
-        return spark.read.parquet(path)
-    # Detect the ts physical type from ONE parquet footer via pyarrow —
-    # no Spark session conf involved — and only flip the session-global
-    # nanosAsLong when the file genuinely is TIMESTAMP(NANOS).  The
-    # flip races concurrent parquet reads on the same session (another
-    # thread's NANOS read in the window silently infers bigint), so:
-    # (a) on the common µs-physical generation no flip ever happens and
-    # there is no window at all; (b) on a NANOS generation the flip is
-    # serialized by a module lock against our own concurrent
-    # read_table calls, with the residual cross-reader window
-    # documented here.  NOT spark.newSession(): a cloned session would
-    # dodge the race but pins every events-derived plan to the clone's
-    # conf, silently ignoring the caller's runtime conf changes
-    # (broadcast thresholds, AQE knobs) for those plans.
-    if _events_ts_is_nanos(path):
-        with _NANOS_CONF_LOCK:
-            prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            try:
-                df = spark.read.parquet(path)  # schema resolved eagerly
-            finally:
-                if prev is None:
-                    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-                else:
-                    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
-    else:
-        df = spark.read.parquet(path)
-    from pyspark.sql.types import LongType, TimestampNTZType
-
+        return df
     if isinstance(df.schema["ts"].dataType, LongType):
         # exact FLOOR division in bigint: `div` truncates toward zero,
         # which shifts every pre-1970 non-whole-microsecond nanosecond
@@ -242,11 +247,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # NTZ also rejects cast-to-long, which the epoch queries need
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
-    """Load several test tables at once; keys are table names."""
-    return {name: read_table(spark, sf_dir, name) for name in names}
 
 
 def read_parquet_evolving(spark: SparkSession, path: str) -> DataFrame:
