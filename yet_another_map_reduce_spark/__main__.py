@@ -21,9 +21,11 @@ Verb-by-verb mapping to the reference:
   ``--out`` file.
 - ``-mr`` (``client.py:126``): the reference ships mapper.py/reducer.py
   to workers and runs map → hash shuffle → sort → reduce (F3-F6).
-  Here: :func:`run_streaming_job` pipes the UNMODIFIED external
-  programs through the same dataflow, and writes reference-style text
-  part-files when ``--output`` is given.
+  Here: :func:`run_streaming_job` runs the UNMODIFIED external
+  programs through the same dataflow as Spark SQL ``TRANSFORM``s (each
+  command under ``bash -c``, so both paths are ``shlex.quote``d; a
+  program that exits non-zero fails the job), and writes
+  reference-style text part-files when ``--output`` is given.
 
 The catalog root defaults to ``./.yamr_catalog`` (override with
 ``--catalog``); ``-w`` stores data under ``<catalog>/data/<name>``.

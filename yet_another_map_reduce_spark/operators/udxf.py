@@ -5,7 +5,8 @@ The reference's core feature is arbitrary user map/reduce programs
 ``/root/reference/Worker/worker.py:88,193``).  Spark-first, that surface
 splits into:
 
-- **pipe programs** → operators/mapreduce.py (byte-exact compat);
+- **pipe programs** → operators/mapreduce.py (Spark SQL ``TRANSFORM``,
+  byte-exact compat);
 - **scalar UDF** → ``pandas_udf``: Arrow-vectorized batches, never
   row-at-a-time pickling (10-100× difference at scale);
 - **grouped UDAF** → ``applyInPandas``: whole key-group as a pandas
